@@ -300,20 +300,6 @@ object Dedup {
       .toDF("_id", "sh")
   }
 
-  /** HOT shingle hashes of a corpus — document frequency above
-    * `hotMinDf`, worst offenders first, capped at `maxHot` (the bound
-    * that keeps the driver collect and the InSet probe small; past the
-    * cap the TOP offenders are still taken, so the filter degrades
-    * gracefully, never silently). One map-side-combined aggregate over
-    * the 8-byte hash rows. */
-  private def hotShingles(
-      sh: DataFrame, hotMinDf: Int, maxHot: Int): Array[Long] =
-    sh.groupBy("sh").agg(count(lit(1)).as("_df"))
-      .where(col("_df") > hotMinDf)
-      .orderBy(col("_df").desc, col("sh").asc)
-      .limit(maxHot)
-      .select("sh").collect().map(_.getLong(0))
-
   /** Per-doc PPJoin prefixes under the FREQUENCY-AWARE global order
     * (cold-by-hash, then hot-by-hash): the prefix theorem holds for ANY
     * fixed total order of the shingle universe, and ordering frequent
@@ -534,22 +520,17 @@ object Dedup {
     // (a, b, sa, sb, count) to the shuffle. On DISK those are
     // lz4-compressed blocks, not UnsafeRows: calibrated against the r12
     // sf10 board — 2.75e9 pairs (MassProbe) → ~17 GB/query measured ≈
-    // 6.2 B/pair — the default charges 8 B/pair (knob
-    // graft.dedup.bytesPerPair; margin for less-compressible id
-    // distributions). When the estimate cannot fit the budget, refuse
-    // LOUDLY naming the bytes instead of dying with ENOSPC mid-shuffle
-    // an hour in — the r12 sf30 attempt wrote ~70 GB of a ~150 GB
+    // 6.2 B/pair — the estimate charges 8 B/pair (margin for
+    // less-compressible id distributions). When the estimate cannot fit
+    // the budget, refuse LOUDLY naming the bytes instead of dying with
+    // ENOSPC mid-shuffle an hour in — the r12 sf30 attempt wrote ~70 GB of a ~150 GB
     // (= 3×2.75e9 pairs × ~6.2 B) trio shuffle into 69 GB of free disk
     // (the q113/q115 certify-or-refuse house style).
-    val bytesPerPair = spark.conf.getOption("graft.dedup.bytesPerPair")
-      .map(_.toLong).getOrElse(8L)
-    val estBytes =
-      if (bytesPerPair > 0 && mass > Long.MaxValue / bytesPerPair) Long.MaxValue
-      else mass * bytesPerPair
+    val estBytes = if (mass > Long.MaxValue / 8L) Long.MaxValue else mass * 8L
     val budget = pairShuffleBudget(spark)
     if (estBytes > budget) throw new IllegalStateException(
       s"dense pair generation refused: estimated pair-stream shuffle " +
-        s"$estBytes bytes ($mass pairs x $bytesPerPair B/pair) exceeds " +
+        s"$estBytes bytes ($mass pairs x 8 B/pair) exceeds " +
         s"the shuffle-disk budget $budget bytes. Raise " +
         s"graft.dedup.maxPairShuffleBytes (or set -1 to disable), free " +
         s"local-dir disk, or cut the meet mass (higher tau / hotter " +
@@ -571,22 +552,19 @@ object Dedup {
     // Identical pair enumeration (ascending id order either way) and
     // identical output columns; DedupSpec pins slim == legacy. The
     // legacy shape remains THE path whenever the corpus is too big or
-    // the ids don't fit: > slimSizesLimit docs (the broadcast budget —
-    // ~16M rows ≈ 0.5 GB built relation), or ids outside [0, 2^31).
+    // the ids don't fit: > 16M docs (the broadcast budget — ~0.5 GB
+    // built relation), or ids outside [0, 2^31).
     // The decision costs one doc-stats aggregate over the (caller-
     // cached) hash rows — linear, ~1% of the pair stage it sizes.
     val sizesPlan = sh.groupBy("_id").agg(count(lit(1)).as("sz"))
-    val slimLimit = spark.conf.getOption("graft.dedup.slimSizesLimit")
-      .map(_.toLong).getOrElse(16L * 1000 * 1000)
-    val slimOn = spark.conf.getOption("graft.dedup.slimPairs")
-      .forall(_.toBoolean) // default true; the spec's A/B kill-switch
+    val slimLimit = 16L * 1000 * 1000
     val st = sizesPlan
       .agg(count(lit(1)).as("n"), min(col("_id")).as("lo"),
         max(col("_id")).as("hi")).head()
     val nDocs = st.getLong(0)
     val idsFit = nDocs == 0L ||
       (st.getLong(1) >= 0L && st.getLong(2) < (1L << 31))
-    val slim = slimOn && nDocs <= slimLimit && idsFit
+    val slim = nDocs <= slimLimit && idsFit
     // PINNED (coalesce disabled), not just sized: AQE coalesces stages by
     // map-output bytes, and the postings exchange is ~1000× smaller than
     // the pair volume its consumer generates — the r12 sf10 probe
@@ -1359,13 +1337,16 @@ object Dedup {
     // score column — size(tokens(text)) for q133 — over the ENTIRE
     // corpus scan. With the projection above the broadcast join, the
     // expensive expression runs on members only; same rows, same values.
+    // the cast id rides under an internal name: a corpus whose id column
+    // is itself `id` would otherwise carry two `id` columns into the join
+    val members = comp.select(col("id").as("_mid"), col("comp").as("_comp"))
     val memberScores = df
-      .select(col(idCol).cast("long").as("id") +: df.columns.map(col): _*)
-      .join(hint(comp), Seq("id"))
-      .select(col("id"), col("comp"), score.as("_score"))
-    val winners = memberScores.groupBy(col("comp"))
-      .agg(max(struct(col("_score"), (-col("id")).as("_nid"),
-        col("id").as("_win"))).as("_m"))
+      .select(col(idCol).cast("long").as("_mid") +: df.columns.map(col): _*)
+      .join(hint(members), Seq("_mid"))
+      .select(col("_mid"), col("_comp"), score.as("_score"))
+    val winners = memberScores.groupBy(col("_comp"))
+      .agg(max(struct(col("_score"), (-col("_mid")).as("_nid"),
+        col("_mid").as("_win"))).as("_m"))
       .select(col("_m._win").as("_winner"))
     val losers = comp.select(col("id").as("_loser"))
       .join(hint(winners), col("_loser") === col("_winner"), "left_anti")

@@ -59,7 +59,8 @@ object MinHashLSH {
     * the self-join reuses that distribution (one exchange, zero extras)
     * and the result stays a LAZY plan. Small corpora skip the
     * repartition — the default AQE plan was already optimal there and
-    * the finer blocks only cost (the r13 q140/q143 lesson).
+    * the finer blocks only cost (the gate is [[graft.core.Par.forSelfJoin]],
+    * shared with SimHash).
     *
     * Dedup is arithmetic, not an exchange: a pair sharing several band
     * buckets is kept only in the FIRST shared band, decided from the two
@@ -71,7 +72,6 @@ object MinHashLSH {
       sigs: DataFrame, bands: Int, rowsPerBand: Int,
       bandKey: (Int, Seq[org.apache.spark.sql.Column]) => org.apache.spark.sql.Column)
       : DataFrame = {
-    val spark = sigs.sparkSession
     val bandHashes = array((0 until bands).map { j =>
       val slice = (0 until rowsPerBand).map(r => col("sig").getItem(j * rowsPerBand + r))
       bandKey(j, slice)
@@ -82,30 +82,9 @@ object MinHashLSH {
     val mass = banded.groupBy("band", "bh").agg(count(lit(1)).as("_df"))
       .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
       .head().getLong(0)
-    val rowsPerTask = 2L * 1000 * 1000
-    // skip gate retuned round 15 (see SimHash.hammingPairs — the same
-    // r14 condition assumed the default join would run ~cores tasks;
-    // AQE sizes it by bytes, so a small blocked table coalesces to ~1
-    // task streaming the whole band meet volume): the skip engages only
-    // when the mass also fits the DEFAULT plan's estimated parallelism.
-    val skip = spark.conf.getOption("graft.simhash.probeSkip") match {
-      case Some("on") => true
-      case Some("off") => false
-      case _ =>
-        val bandedRows = bands.toLong * s.count() // s checkpointed: cheap
-        val advisory = spark.conf
-          .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(64L * 1024 * 1024)
-        val estDefaultTasks = math.max(1L, bandedRows * 16L / advisory)
-        mass <= rowsPerTask *
-          math.min(spark.sparkContext.defaultParallelism.toLong, estDefaultTasks)
-    }
-    val bx =
-      if (skip) banded
-      else banded.repartition(
-        graft.core.GraftSession.iterPartitions(spark, mass, rowsPerTask),
-        col("band"), col("bh"))
+    // the shared skip gate (s checkpointed: cheap count)
+    val bx = graft.core.Par.forSelfJoin(banded, mass, bands.toLong * s.count(),
+      col("band"), col("bh"))
     // "shared earlier band" must mean exactly "the equi-join at that band
     // would have matched" — plain (null-rejecting) equality, coalesced to
     // false so a null key can never veto the whole predicate

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * quadratic term drops from N² to C·(N/C)².
   *
   * Scale shape: centroid training is [[Similarity.kMeans]] (one
-  * map-side-combining groupBy per round, C×dim driver state); assignment is
+  * treeAggregate per round, C×dim driver state); assignment is
   * a shuffle-free codegen argmax over literal-broadcast centroids; candidate
   * generation is a self-equi-join ON THE CLUSTER ID — one shuffle of
   * (id, vec, bucket) rows, never all-pairs. Verification is one codegen'd

@@ -105,13 +105,13 @@ object SimHash {
     * (one exchange, ReuseExchange across the two sides, zero extra
     * shuffles), and the result stays a LAZY plan — the r13 first cut
     * materialized the pair list inside a conf-pinned scope instead, and
-    * checkpointing 344M pairs at sf30 doubled q153's wall. Per-bucket
+    * checkpointing 344M pairs at sf30 doubled q153's wall. Small meet
+    * masses skip the repartition ([[graft.core.Par.forSelfJoin]]). Per-bucket
     * skew caveat (same as densePairCounts): one bucket's pairs cannot
     * split across tasks, so a single saturated 16-bit bucket still
     * bounds a task at C(df_max, 2) pairs. */
   def hammingPairs(sig: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4 blocks of 16 bits guarantee recall only for hamming <= 3")
-    val spark = sig.sparkSession
     def block(c: Column, j: Int): Column =
       shiftrightunsigned(c, j * 16).bitwiseAND(0xFFFFL)
     val blocks = array((0 until 4).map { j =>
@@ -129,52 +129,10 @@ object SimHash {
     val mass = blocked.groupBy("blk", "bv").agg(count(lit(1)).as("_df"))
       .agg(coalesce(sum(expr("(_df * (_df - 1)) DIV 2")), lit(0L)))
       .head().getLong(0)
-    // Small-corpus skip (round 14): when the meet mass wants no more
-    // tasks than the default parallelism, the pre-r13 default AQE plan
-    // was already optimal — the explicit repartition only added an
-    // exchange with finer blocks (q140 8.2 → 15.2 s, q143 6.7 → 8.3 s at
-    // sf10 on the r13 board). The probe job above is cheap (the sig
-    // table is checkpointed); only the fine partitioning costs, so it
-    // now engages exactly when the mass says it pays.
-    val rowsPerTask = 2L * 1000 * 1000
-    // graft.simhash.probeSkip: "on" forces the skip, "off" forces the
-    // repartition — the r15 A/B instrument for adjudicating the q97
-    // regression (r14 VERDICT item 3); unset = the sizing heuristic.
-    //
-    // Heuristic RETUNED (round 15): the r14 skip condition compared the
-    // mass against rowsPerTask × defaultParallelism — assuming the
-    // DEFAULT plan would run ~cores join tasks. It does not: AQE sizes
-    // the join's exchange by map-output BYTES, and a small corpus's
-    // blocked table is a few MB, so the default join coalesces to ~1
-    // task streaming the whole meet volume (q97 at sf1: paired A/B/A/B
-    // measured skip-ON 2.49 s vs skip-OFF 1.73-1.99 s at matched calib —
-    // a real ~30 % regression; r13's always-repartition 1.51 s). The
-    // skip now engages only when the mass also fits the parallelism the
-    // DEFAULT plan would actually provide — estimated from the blocked
-    // row count × ~16 B/row against the AQE advisory partition size —
-    // so tiny-byte/huge-mass corpora repartition again while the
-    // q140/q143 small-mass sf10 shape (where the extra exchange only
-    // costs) keeps the skip. sf10 A/B: q140 8.7 on / 10.0 off,
-    // q143/q153/q97 parity — the skip's win is small and real there.
-    val skipConf = spark.conf.getOption("graft.simhash.probeSkip")
-    val skip = skipConf match {
-      case Some("on") => true
-      case Some("off") => false
-      case _ =>
-        val blockedRows = 4L * s.count() // s is checkpointed: cheap count
-        val advisory = spark.conf
-          .getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(64L * 1024 * 1024)
-        val estDefaultTasks = math.max(1L, blockedRows * 16L / advisory)
-        mass <= rowsPerTask *
-          math.min(spark.sparkContext.defaultParallelism.toLong, estDefaultTasks)
-    }
-    val bx =
-      if (skip) blocked
-      else blocked.repartition(
-        graft.core.GraftSession.iterPartitions(spark, mass, rowsPerTask),
-        col("blk"), col("bv"))
+    // repartition on the join keys unless the default plan already runs
+    // the join well (the shared skip gate; s is checkpointed: cheap count)
+    val bx = graft.core.Par.forSelfJoin(blocked, mass, 4L * s.count(),
+      col("blk"), col("bv"))
     val firstShared = !(0 until 3).map { j =>
       (col("x.blk") > j) &&
         (block(col("x.simhash"), j) === block(col("y.simhash"), j))

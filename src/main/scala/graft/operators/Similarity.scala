@@ -73,54 +73,6 @@ object Similarity {
       .select(col(idCol), col("_vec").as(vecCol), col("bucket"))
   }
 
-  /** Deterministic k-means-lite (Lloyd) centroid training for IVF.
-    *
-    * Init is the first C vectors by id (deterministic, no RNG); each round
-    * assigns every vector to its nearest centroid (codegen cosine argmax,
-    * broadcast centroids) and recomputes centroids as per-bucket means —
-    * ONE groupBy shuffle per round carrying C×dim doubles per partition
-    * after map-side partial aggregation. Rounds are few and fixed (the
-    * centroids only gate recall, not correctness). Empty buckets keep
-    * their previous centroid. */
-  def kMeans(
-      df: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int): Seq[Seq[Double]] = {
-    // Lloyd re-scans the corpus every round (dim probe + init + one agg per
-    // iteration): cache the two columns it reads for the loop's lifetime —
-    // the classic iterative-ML persist — and release before returning.
-    val vecs = df.select(col(idCol), col(vecCol)).cache()
-    // the columnar round builds C cosine columns and dim sum-aggregates —
-    // fine at IVF-coarse shapes, codegen-hostile once C reaches the
-    // hundreds; the treeAggregate path has no per-centroid expressions
-    try
-      if (c > 64) kMeansTreeCached(vecs, idCol, vecCol, c, iters)
-      else kMeansCached(vecs, idCol, vecCol, c, iters)
-    finally { vecs.unpersist(); () }
-  }
-
-  /** Lloyd rounds via RDD `treeAggregate` — the large-C path ([[kMeans]]
-    * dispatches here above C = 64, or call directly). Semantics match the
-    * columnar rounds: first-C-by-id init, cosine argmax with first-max
-    * (lowest index) ties — NaN ordered greatest, as Spark's `greatest`
-    * orders doubles — and empty buckets keep their previous centroid.
-    *
-    * Per partition ONE flat (c×dim sums, c counts) accumulator is filled
-    * in a tight JVM loop (no per-centroid Columns, no codegen blowup);
-    * partials combine in a depth-2 tree, so the driver merges
-    * O(√partitions) buffers instead of every partition's — the classic
-    * treeAggregate bargain for C in the thousands. Float caveat: combine
-    * order is scheduler-dependent, so centroid sums carry the usual
-    * last-ulp addition-order jitter (the columnar path's shuffled partial
-    * aggregation has the same property — neither is bit-pinned).
-    */
-  def kMeansTree(
-      df: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int, depth: Int = 2): Seq[Seq[Double]] = {
-    val vecs = df.select(col(idCol), col(vecCol)).cache()
-    try kMeansTreeCached(vecs, idCol, vecCol, c, iters, depth)
-    finally { vecs.unpersist(); () }
-  }
-
   /** Vector dimensionality from the first row — a loud, named refusal on
     * an empty corpus (training/banding cannot infer a dim from nothing;
     * an empty input otherwise surfaces as a bare NoSuchElementException
@@ -131,90 +83,87 @@ object Similarity {
     row.head.getInt(0)
   }
 
-  private def kMeansTreeCached(
-      df: DataFrame, idCol: String, vecCol: String,
-      c: Int, iters: Int, depth: Int = 2): Seq[Seq[Double]] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dim = vecDim(df, vecCol, "kMeans")
-    var centroids: Array[Array[Double]] = df.orderBy(col(idCol)).limit(c)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val data = df.select(col(vecCol)).as[Array[Float]].rdd
-    (1 to iters).foreach { _ =>
-      val bc = spark.sparkContext.broadcast(centroids)
-      val (sums, counts) = data.treeAggregate(
-        (new Array[Double](c * dim), new Array[Long](c)))(
-        seqOp = { case ((s, n), v) =>
-          val cs = bc.value
-          // argmax of dot/(|v||c|): same fold order as the codegen cosine
-          var best = Double.NegativeInfinity
-          var bestI = 0
-          var vn = 0.0
-          var i = 0
-          while (i < dim) { vn += v(i).toDouble * v(i).toDouble; i += 1 }
-          val vnorm = math.sqrt(vn)
-          var b = 0
-          while (b < cs.length) {
-            val cv = cs(b)
-            var dot = 0.0
-            var cn = 0.0
-            i = 0
-            while (i < dim) {
-              dot += v(i).toDouble * cv(i); cn += cv(i) * cv(i); i += 1
-            }
-            val sim = dot / (vnorm * math.sqrt(cn))
-            // Double.compare orders NaN greatest — Spark greatest() parity
-            if (java.lang.Double.compare(sim, best) > 0) { best = sim; bestI = b }
-            b += 1
-          }
-          i = 0
-          while (i < dim) { s(bestI * dim + i) += v(i).toDouble; i += 1 }
-          n(bestI) += 1
-          (s, n)
-        },
-        combOp = { case ((s1, n1), (s2, n2)) =>
-          var i = 0
-          while (i < s1.length) { s1(i) += s2(i); i += 1 }
-          i = 0
-          while (i < n1.length) { n1(i) += n2(i); i += 1 }
-          (s1, n1)
-        },
-        depth = depth)
-      bc.destroy()
-      centroids = centroids.zipWithIndex.map { case (prev, b) =>
-        if (counts(b) == 0L) prev
-        else Array.tabulate(dim)(i => sums(b * dim + i) / counts(b))
-      }
-    }
-    centroids.map(_.toSeq).toSeq
-  }
-
-  private def kMeansCached(
+  /** Deterministic k-means-lite (Lloyd) centroid training for IVF.
+    *
+    * Init is the first C vectors by id (deterministic, no RNG); each round
+    * assigns every vector to its nearest centroid — cosine argmax with
+    * first-max (lowest index) ties, NaN ordered greatest as Spark's
+    * `greatest` orders doubles, i.e. [[assignBuckets]]' rule — and
+    * recomputes centroids as per-bucket means. Empty buckets keep their
+    * previous centroid. Rounds are few and fixed (the centroids only gate
+    * recall, not correctness).
+    *
+    * Each round is one RDD `treeAggregate` (the MLlib Lloyd shape): per
+    * partition ONE flat (c×dim sums, c counts) accumulator is filled in a
+    * tight JVM loop against the broadcast centroids — no per-centroid
+    * Columns, no codegen blowup at large C — and partials combine in a
+    * depth-2 tree, so the driver merges O(√partitions) buffers. Float
+    * caveat: combine order is scheduler-dependent, so centroid sums carry
+    * the usual last-ulp addition-order jitter (not bit-pinned).
+    */
+  def kMeans(
       df: DataFrame, idCol: String, vecCol: String,
       c: Int, iters: Int): Seq[Seq[Double]] = {
-    val dim = vecDim(df, vecCol, "kMeans")
-    var centroids: Seq[Seq[Double]] = df.orderBy(col(idCol)).limit(c)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    (1 to iters).foreach { _ =>
-      val assigned = assignBuckets(df, idCol, vecCol, centroids)
-      val sums = assigned
-        .select(col("bucket"), transform(col(vecCol), x => x.cast("double")).as("_v"))
-        .groupBy("bucket")
-        .agg(
-          count(lit(1)).as("_n"),
-          array((0 until dim).map(i => sum(col("_v").getItem(i))): _*).as("_s"))
-        .collect()
-      val next = centroids.toArray
-      sums.foreach { r =>
-        val b = r.getInt(0)
-        val n = r.getLong(1).toDouble
-        next(b) = r.getSeq[Double](2).map(_ / n).toSeq
+    // Lloyd re-scans the corpus every round (dim probe + init + one agg per
+    // iteration): cache the two columns it reads for the loop's lifetime —
+    // the classic iterative-ML persist — and release before returning.
+    val vecs = df.select(col(idCol), col(vecCol)).cache()
+    try {
+      val spark = vecs.sparkSession
+      import spark.implicits._
+      val dim = vecDim(vecs, vecCol, "kMeans")
+      var centroids: Array[Array[Double]] = vecs.orderBy(col(idCol)).limit(c)
+        .select(col(vecCol)).collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      val data = vecs.select(col(vecCol)).as[Array[Float]].rdd
+      (1 to iters).foreach { _ =>
+        val bc = spark.sparkContext.broadcast(centroids)
+        val (sums, counts) = data.treeAggregate(
+          (new Array[Double](c * dim), new Array[Long](c)))(
+          seqOp = { case ((s, n), v) =>
+            val cs = bc.value
+            // argmax of dot/(|v||c|): same fold order as the codegen cosine
+            var best = Double.NegativeInfinity
+            var bestI = 0
+            var vn = 0.0
+            var i = 0
+            while (i < dim) { vn += v(i).toDouble * v(i).toDouble; i += 1 }
+            val vnorm = math.sqrt(vn)
+            var b = 0
+            while (b < cs.length) {
+              val cv = cs(b)
+              var dot = 0.0
+              var cn = 0.0
+              i = 0
+              while (i < dim) {
+                dot += v(i).toDouble * cv(i); cn += cv(i) * cv(i); i += 1
+              }
+              val sim = dot / (vnorm * math.sqrt(cn))
+              // Double.compare orders NaN greatest — Spark greatest() parity
+              if (java.lang.Double.compare(sim, best) > 0) { best = sim; bestI = b }
+              b += 1
+            }
+            i = 0
+            while (i < dim) { s(bestI * dim + i) += v(i).toDouble; i += 1 }
+            n(bestI) += 1
+            (s, n)
+          },
+          combOp = { case ((s1, n1), (s2, n2)) =>
+            var i = 0
+            while (i < s1.length) { s1(i) += s2(i); i += 1 }
+            i = 0
+            while (i < n1.length) { n1(i) += n2(i); i += 1 }
+            (s1, n1)
+          },
+          depth = 2)
+        bc.destroy()
+        centroids = centroids.zipWithIndex.map { case (prev, b) =>
+          if (counts(b) == 0L) prev
+          else Array.tabulate(dim)(i => sums(b * dim + i) / counts(b))
+        }
       }
-      centroids = next.toSeq
-    }
-    centroids
+      centroids.map(_.toSeq).toSeq
+    } finally { vecs.unpersist(); () }
   }
 
   /** The `nprobe` bucket indices whose centroids are cosine-closest to the

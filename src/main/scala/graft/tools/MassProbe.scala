@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Print the dense generator's pair meet mass Σ C(df, 2) for the word-3-gram
   * corpus at a scale dir — the number [[graft.operators.Dedup.densePairCounts]]'s
   * round-14 shuffle-budget pre-flight multiplies by bytes/pair. Used to
-  * calibrate `graft.dedup.bytesPerPair` against a measured board's shuffle
+  * check that pre-flight's 8 B/pair against a measured board's shuffle
   * bytes. Usage: `graft.tools.MassProbe <sfdir>`. */
 object MassProbe {
   def main(args: Array[String]): Unit = {

@@ -240,6 +240,11 @@ class DedupSpec extends AnyFunSuite {
     val best = Dedup.dedupCorpusBy(corpus, "doc_id", "text", n = 3, tau = 0.6, score)
       .select("doc_id").as[Long].collect().toSet
     assert(best == Set(2L, 4L, 5L), s"got $best")
+    // an id column literally named `id` must give the same survivors
+    val byId = Dedup.dedupCorpusBy(corpus.withColumnRenamed("doc_id", "id"), "id", "text",
+        n = 3, tau = 0.6, score)
+      .select("id").as[Long].collect().toSet
+    assert(byId == best, s"id-named corpus $byId vs doc_id-named $best")
     // min-id keeper for contrast: same clusters, different survivor in A
     val minId = Dedup.dedupCorpus(corpus, "doc_id", "text", n = 3, tau = 0.6)
       .select("doc_id").as[Long].collect().toSet
@@ -343,9 +348,8 @@ class DedupSpec extends AnyFunSuite {
       }
     }
     val corpus = (base ++ mutated).toDF("doc_id", "text")
-    val conf = spark.conf
-    def run() = {
-      val sh = Dedup.shingleHashes(corpus, "doc_id", "text", n = 3).cache()
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      val sh = Dedup.shingleHashes(df, "doc_id", "text", n = 3).cache()
       val j = Dedup.ngramJaccardPairsFromHashes(sh, 0.5)
         .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
       val c = Dedup.denseContainment(sh, 0.6)
@@ -353,21 +357,14 @@ class DedupSpec extends AnyFunSuite {
       sh.unpersist()
       (j, c)
     }
-    val (slimJ, slimC) = run() // default: slim fires (small ids, small corpus)
-    val (legJ, legC) =
-      try { conf.set("graft.dedup.slimPairs", "false"); run() }
-      finally conf.unset("graft.dedup.slimPairs")
-    assert(slimJ == legJ && slimJ.nonEmpty)
-    assert(slimC == legC && slimC.nonEmpty)
+    val (slimJ, slimC) = run(corpus) // slim fires (small ids, small corpus)
+    assert(slimJ.nonEmpty && slimC.nonEmpty)
     // ids past 2^31 must take the legacy path (packing needs [0, 2^31))
-    // and still produce the offset-identical pair set
-    val big = corpus.withColumn("doc_id", col("doc_id") + lit(5_000_000_000L))
-    val shB = Dedup.shingleHashes(big, "doc_id", "text", n = 3).cache()
-    val bigJ = Dedup.ngramJaccardPairsFromHashes(shB, 0.5)
-      .orderBy("a", "b").as[(Long, Long, Double)].collect().toSeq
-    shB.unpersist()
-    assert(bigJ == slimJ.map { case (a, b, x) =>
-      (a + 5_000_000_000L, b + 5_000_000_000L, x) })
+    // and still produce the offset-identical pair sets
+    val off = 5_000_000_000L
+    val (bigJ, bigC) = run(corpus.withColumn("doc_id", col("doc_id") + lit(off)))
+    assert(bigJ == slimJ.map { case (a, b, x) => (a + off, b + off, x) })
+    assert(bigC == slimC.map { case (a, b, x) => (a + off, b + off, x) })
   }
 
   test("candidatePairs: each banded pair exactly once, set equals the naive shared-bucket model") {

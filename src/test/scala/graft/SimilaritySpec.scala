@@ -46,18 +46,48 @@ class SimilaritySpec extends AnyFunSuite {
     assert(buckets.nonEmpty && buckets.subsetOf((0 until 4).toSet))
   }
 
-  test("kMeansTree: matches the columnar rounds; large-C dispatch works") {
+  /** Plain-Scala Lloyd over collected rows — the independent reference for
+    * [[Similarity.kMeans]]: first C by id, cosine argmax with lowest-index
+    * ties, per-bucket means, empty buckets keep their centroid. */
+  private def lloydReference(
+      rows: Seq[(Long, Seq[Double])], c: Int, iters: Int): Seq[Seq[Double]] = {
+    def cos(a: Seq[Double], b: Seq[Double]): Double = {
+      val dot = a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+      dot / (math.sqrt(a.foldLeft(0.0)((acc, x) => acc + x * x)) *
+        math.sqrt(b.foldLeft(0.0)((acc, x) => acc + x * x)))
+    }
+    val vecs = rows.sortBy(_._1).map(_._2)
+    (1 to iters).foldLeft(vecs.take(c)) { (cents, _) =>
+      val byBucket = vecs.groupBy { v =>
+        cents.indices.foldLeft(0) { (best, i) =>
+          if (cos(v, cents(i)) > cos(v, cents(best))) i else best
+        }
+      }
+      cents.indices.map { i =>
+        byBucket.get(i).fold(cents(i)) { members =>
+          members.transpose.map(_.sum / members.length)
+        }
+      }
+    }
+  }
+
+  test("kMeans: matches a plain-Scala Lloyd reference; large C works") {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.core.Tables.load(spark, dir, "embeddings")
-    val columnar = Similarity.kMeans(emb, "vec_id", "embedding", c = 8, iters = 3)
-    val tree = Similarity.kMeansTree(emb, "vec_id", "embedding", c = 8, iters = 3)
-    assert(tree.length == 8 && tree.forall(_.length == 64))
-    // same assignments + means modulo combine-order float jitter
-    val maxDiff = columnar.zip(tree)
-      .flatMap { case (a, b) => a.zip(b).map { case (x, y) => math.abs(x - y) } }
-      .max
-    assert(maxDiff < 1e-9, s"centroid drift $maxDiff")
-    // c > 64 routes kMeans through the tree path and still converges
+    val rows = emb.select("vec_id", "embedding").collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq)
+    val expected = lloydReference(rows, c = 8, iters = 3)
+    // as loaded, and spread over several partitions (the treeAggregate
+    // combine order differs; the means must not)
+    for (input <- Seq(emb, emb.repartition(4))) {
+      val got = Similarity.kMeans(input, "vec_id", "embedding", c = 8, iters = 3)
+      assert(got.length == 8 && got.forall(_.length == 64))
+      val maxDiff = expected.zip(got)
+        .flatMap { case (a, b) => a.zip(b).map { case (x, y) => math.abs(x - y) } }
+        .max
+      assert(maxDiff < 1e-9, s"centroid drift $maxDiff")
+    }
+    // C beyond the dimensionality (many buckets, some possibly empty)
     val big = Similarity.kMeans(emb, "vec_id", "embedding", c = 70, iters = 1)
     assert(big.length == 70 && big.forall(_.length == 64))
   }

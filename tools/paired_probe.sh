@@ -8,8 +8,11 @@
 #
 # Usage:
 #   tools/paired_probe.sh <sfdir> <queries> <ENV_VAR> <valA> <valB> [pairs]
-# Example (re-running the r11 IPN decision):
-#   tools/paired_probe.sh /tmp/sf10 q101_dup_spans SPARK_GRAFT_IPN_MULT 16 32 2
+# Example (two AQE initial-partition ceilings through the one A/B hook,
+# SPARK_GRAFT_EXTRA_CONF — ';'-separated k=v confs applied last):
+#   tools/paired_probe.sh /tmp/sf10 q101_dup_spans SPARK_GRAFT_EXTRA_CONF \
+#     spark.sql.adaptive.coalescePartitions.initialPartitionNum=64 \
+#     spark.sql.adaptive.coalescePartitions.initialPartitionNum=128 2
 #
 # Each arm is one run_bench.sh pass (REPS=1, SPARK_GRAFT_ONLY=<queries>);
 # results land in /tmp/paired_probe/<n>_<arm>.json and a per-query summary
